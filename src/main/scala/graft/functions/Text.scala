@@ -23,14 +23,15 @@ object Text {
   /** Tokens as an array (single-space separated corpora). */
   def tokens(text: Column): Column = split(trim(text), " ")
 
-  /** Word n-gram shingles, e.g. n=3 → "a b c" strings. Pure HOF expression:
-    * transform over an index sequence + slice + concat_ws. */
-  def shingles(text: Column, n: Int): Column = {
-    val ws = tokens(text)
-    when(size(ws) < n, array().cast("array<string>")).otherwise(
-      transform(sequence(lit(1), size(ws) - (n - 1)),
-        i => concat_ws(" ", slice(ws, i, lit(n)))))
-  }
+  /** Word n-gram shingles, e.g. n=3 → "a b c" strings: every run of `n`
+    * consecutive [[tokens]] joined by single spaces, in order, repeats
+    * kept; fewer than `n` tokens → empty array, null text → null. The one
+    * shingle implementation of the engine — set semantics (LSH, Jaccard,
+    * containment) wrap it in `array_distinct`. A native codegen'd
+    * expression ([[graft.plans.WordShingles]]) on the UTF-8 bytes. */
+  def shingles(text: Column, n: Int): Column =
+    org.apache.spark.sql.GraftShim.column(
+      graft.plans.WordShingles(org.apache.spark.sql.GraftShim.expression(text), n))
 
   /** Punctuation count of a single character (portable replace identity). */
   def charCount(text: Column, ch: String): Column =
@@ -107,7 +108,7 @@ object Text {
       n: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val g = docs.select(col(idCol).as("doc_id"),
-      explode(Vectors.shinglesAllFast(n)(col(textCol))).as("gram"))
+      explode(shingles(col(textCol), n)).as("gram"))
     val counts = g.groupBy(col("doc_id"), col("gram")).agg(count(lit(1)).as("c"))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("c").desc, col("gram").asc)
     counts.withColumn("rn", row_number().over(w)).where(col("rn") === 1)

@@ -102,34 +102,6 @@ object Vectors {
       }
     }
 
-  /** Compiled word n-gram shingling (single-space tokenization), identical
-    * output to `array_distinct(Text.shingles(text, n))`. */
-  def shinglesFast(n: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (text: String) =>
-      val ws = if (text == null) Array.empty[String] else text.trim.split(" ", -1)
-      if (ws.length < n) Array.empty[String]
-      else {
-        val out = new scala.collection.mutable.LinkedHashSet[String]
-        var i = 0
-        while (i <= ws.length - n) {
-          out += ws.slice(i, i + n).mkString(" ")
-          i += 1
-        }
-        out.toArray
-      }
-    }
-
-  /** Compiled word n-gram shingling WITHOUT dedup — all occurrences, in
-    * order, identical to `Text.shingles(text, n)` (which is an interpreted
-    * HOF; use this in hot paths that need occurrence counts, e.g. the
-    * repetition filter). */
-  def shinglesAllFast(n: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (text: String) =>
-      val ws = if (text == null) Array.empty[String] else text.trim.split(" ", -1)
-      if (ws.length < n) Array.empty[String]
-      else Array.tabulate(ws.length - n + 1)(i => ws.slice(i, i + n).mkString(" "))
-    }
-
   /** Compiled SQL-PORTABLE MinHash band keys: signature element `s` is the
     * lexicographic MIN over the shingle set of the lowercase-hex
     * `md5(s || ':' || shingle)`, and band key `b` is `md5` of its `r`
@@ -138,84 +110,87 @@ object Vectors {
     * `md5(string_agg(m, '|' ORDER BY s))`, so results can be
     * differential-tested value-by-value against any engine with md5.
     * One JVM call per row replaces a seeds×shingles explode + hash-agg
-    * shuffle (hex compare = binary collation compare: hex chars are
-    * single-byte ASCII in UTF-8). Empty/null shingle sets → empty keys
-    * (doc drops out of banding, like SQL's group-by-nothing). */
+    * shuffle. Empty/null shingle sets → empty keys (doc drops out of
+    * banding, like SQL's group-by-nothing). */
   def md5BandKeys(numHashes: Int, bands: Int): org.apache.spark.sql.expressions.UserDefinedFunction = {
     require(numHashes % bands == 0, s"bands $bands must divide numHashes $numHashes")
-    val r = numHashes / bands
+    val prefixes = md5SeedPrefixes(numHashes)
     udf { (shingles: Seq[String]) =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      def hex(bs: Array[Byte]): String = {
-        val sb = new java.lang.StringBuilder(32)
-        var i = 0
-        while (i < bs.length) {
-          sb.append(Character.forDigit((bs(i) >> 4) & 0xF, 16))
-          sb.append(Character.forDigit(bs(i) & 0xF, 16))
-          i += 1
-        }
-        sb.toString
-      }
-      val sh = if (shingles == null) Seq.empty[String] else shingles
-      if (sh.isEmpty) Seq.empty[String]
-      else {
-        val mins = new Array[String](numHashes)
-        sh.foreach { g =>
-          val bytes = g.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          var s = 0
-          while (s < numHashes) {
-            md.update(s.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            md.update(':'.toByte)
-            md.update(bytes)
-            val h = hex(md.digest()) // digest() resets the instance
-            if (mins(s) == null || h.compareTo(mins(s)) < 0) mins(s) = h
-            s += 1
-          }
-        }
-        (0 until bands).map { b =>
-          val joined = (b * r until (b + 1) * r).map(mins).mkString("|")
-          hex(md.digest(joined.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-        }
-      }
+      val mins = md5Minima(shingles, prefixes)
+      if (mins == null) Seq.empty[String] else md5Bands(mins, bands)
     }
   }
 
-  /** The FULL per-seed signature of the [[md5BandKeys]] family (the
-    * `mins` array before banding), for estimator-calibration panels that
-    * need coordinate-level agreement counts. Same md5 form, so it replays
-    * in SQL as `min(md5(s::VARCHAR || ':' || sh)) ... GROUP BY s`. */
-  def md5Signature(numHashes: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
+  /** The FULL per-seed signature of the [[md5BandKeys]] family (`sig`, the
+    * minima before banding) together with its band keys (`bks`), from ONE
+    * digest pass — for estimator-calibration panels that need
+    * coordinate-level agreement counts. Same md5 form, so `sig` replays in
+    * SQL as `min(md5(s::VARCHAR || ':' || sh)) ... GROUP BY s`. */
+  def md5Sketch(numHashes: Int, bands: Int): org.apache.spark.sql.expressions.UserDefinedFunction = {
+    require(numHashes % bands == 0, s"bands $bands must divide numHashes $numHashes")
+    val prefixes = md5SeedPrefixes(numHashes)
     udf { (shingles: Seq[String]) =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      def hex(bs: Array[Byte]): String = {
-        val sb = new java.lang.StringBuilder(32)
-        var i = 0
-        while (i < bs.length) {
-          sb.append(Character.forDigit((bs(i) >> 4) & 0xF, 16))
-          sb.append(Character.forDigit(bs(i) & 0xF, 16))
-          i += 1
-        }
-        sb.toString
-      }
-      val sh = if (shingles == null) Seq.empty[String] else shingles
-      if (sh.isEmpty) Seq.empty[String]
-      else {
-        val mins = new Array[String](numHashes)
-        sh.foreach { g =>
-          val bytes = g.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          var s = 0
-          while (s < numHashes) {
-            md.update(s.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            md.update(':'.toByte)
-            md.update(bytes)
-            val h = hex(md.digest())
-            if (mins(s) == null || h.compareTo(mins(s)) < 0) mins(s) = h
-            s += 1
-          }
-        }
-        mins.toSeq
-      }
+      val mins = md5Minima(shingles, prefixes)
+      if (mins == null) Md5Sketch(Seq.empty, Seq.empty)
+      else Md5Sketch(mins.toSeq, md5Bands(mins, bands))
     }
+  }
+
+  /** Result row of [[md5Sketch]]: struct<sig: array<string>, bks: array<string>>. */
+  final case class Md5Sketch(sig: Seq[String], bks: Seq[String])
+
+  /** The UTF-8 bytes of `"s:"` for every seed `s`. */
+  private def md5SeedPrefixes(numHashes: Int): Array[Array[Byte]] =
+    Array.tabulate(numHashes)(s => s"$s:".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** Per-seed minima of `md5(prefix(s) || shingle)` as lowercase hex, or
+    * null for an empty/null set. The unsigned byte order of a digest IS
+    * the order of its lowercase hex (hex digits map nibble by nibble onto
+    * '0' < … < '9' < 'a' < … < 'f'), so the minima are taken over raw
+    * digests and only the `numHashes` winners are hex-encoded. */
+  private def md5Minima(shingles: Seq[String], prefixes: Array[Array[Byte]]): Array[String] =
+    if (shingles == null || shingles.isEmpty) null
+    else {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      val k = prefixes.length
+      // start at the largest digest: a digest equal to it leaves the same value
+      val mins = Array.fill(k)(Array.fill[Byte](16)(-1))
+      val d = new Array[Byte](16)
+      shingles.foreach { g =>
+        val bytes = g.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        var s = 0
+        while (s < k) {
+          md.update(prefixes(s))
+          md.update(bytes)
+          md.digest(d, 0, 16) // resets the instance
+          if (java.util.Arrays.compareUnsigned(d, mins(s)) < 0)
+            System.arraycopy(d, 0, mins(s), 0, 16)
+          s += 1
+        }
+      }
+      mins.map(md5Hex)
+    }
+
+  /** Band key `b` = hex md5 of its `numHashes / bands` minima joined by '|'. */
+  private def md5Bands(mins: Array[String], bands: Int): Seq[String] = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val r = mins.length / bands
+    (0 until bands).map { b =>
+      val joined = mins.slice(b * r, (b + 1) * r).mkString("|")
+      md5Hex(md.digest(joined.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    }
+  }
+
+  private def md5Hex(bs: Array[Byte]): String = {
+    val sb = new java.lang.StringBuilder(32)
+    var i = 0
+    while (i < bs.length) {
+      sb.append(Character.forDigit((bs(i) >> 4) & 0xF, 16))
+      sb.append(Character.forDigit(bs(i) & 0xF, 16))
+      i += 1
+    }
+    sb.toString
+  }
 
   /** Compiled shingles→band-keys kernel: minhash signature + banding in one
     * pass per row. Band key = 64-bit hash of (band index, band's minhash

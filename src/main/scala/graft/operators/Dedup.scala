@@ -312,7 +312,7 @@ object Dedup {
     // Par.widen: the shingle+minhash kernel is the CPU hot spot — a narrow
     // scan (one small parquet file) would otherwise run it on 1-2 cores
     val withSig = Par.widen(docs.select(col(idCol).as("id"), col(textCol).as("__t")))
-      .select(col("id"), Vectors.shinglesFast(shingleN)(col("__t")).as("sh"))
+      .select(col("id"), array_distinct(Text.shingles(col("__t"), shingleN)).as("sh"))
       .where(size(col("sh")) > 0)
       // one compiled kernel call per row: signature + banding together
       .withColumn("bands", Vectors.minhashBandKeysFast(numHashes, bands)(col("sh")))
@@ -434,7 +434,7 @@ object Dedup {
       bands: Int = 4,
       threshold: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0, s"bands $bands must divide numHashes $numHashes")
-    // distinct shingles (shinglesFast dedups): the min under every seed is
+    // distinct shingles (array_distinct): the min under every seed is
     // unchanged by duplicates, and the Jaccard verify wants the SET anyway.
     // ONE materialized pass carries shingles AND band keys (one compiled
     // kernel call per doc — a seeds×shingles explode + hash-agg shuffle,
@@ -1184,14 +1184,19 @@ object Dedup {
     * definition on purpose: [[minhashLshPortable]], [[minhashLshDelta]],
     * [[publishLshIndex]] and [[probeLshIndex]] must shingle bit-identically
     * for the probe≡delta certification (and the SQL oracle) to hold.
-    * Widen → compiled shingling → drop empty sets → materialize (every
-    * caller reads the result at least twice). */
+    * [[shingleSets]] → materialize (every caller reads the result at
+    * least twice). */
   private def shingleBase(
       docs: DataFrame, idCol: String, textCol: String, shingleN: Int): DataFrame =
+    shingleSets(docs, idCol, textCol, shingleN).localCheckpoint(true)
+
+  /** Widen → distinct word shingles per doc → drop empty sets: the one
+    * shingling step of the portable md5 LSH family (id, shs). */
+  private def shingleSets(
+      docs: DataFrame, idCol: String, textCol: String, shingleN: Int): DataFrame =
     Par.widen(docs.select(col(idCol).as("id"), col(textCol).as("__t")))
-      .select(col("id"), Vectors.shinglesFast(shingleN)(col("__t")).as("shs"))
+      .select(col("id"), array_distinct(Text.shingles(col("__t"), shingleN)).as("shs"))
       .where(size(col("shs")) > 0)
-      .localCheckpoint(true)
 
   /** [[shingleBase]] with the md5 band keys MATERIALIZED alongside the
     * shingle sets — the index WRITE paths (publish/append) use this so the
@@ -1207,9 +1212,7 @@ object Dedup {
   private def shingleBaseBanded(
       docs: DataFrame, idCol: String, textCol: String, shingleN: Int,
       numHashes: Int, bands: Int): DataFrame =
-    Par.widen(docs.select(col(idCol).as("id"), col(textCol).as("__t")))
-      .select(col("id"), Vectors.shinglesFast(shingleN)(col("__t")).as("shs"))
-      .where(size(col("shs")) > 0)
+    shingleSets(docs, idCol, textCol, shingleN)
       .select(col("id"), col("shs"),
         Vectors.md5BandKeys(numHashes, bands)(col("shs")).as("bks"))
       .localCheckpoint(true)
@@ -1254,13 +1257,13 @@ object Dedup {
   private def shingleBandBase(
       docs: DataFrame, idCol: String, textCol: String, shingleN: Int,
       numHashes: Int, bands: Int, withSig: Boolean = false): (DataFrame, Long) = {
-    val shingled = Par.widen(docs.select(col(idCol).as("id"), col(textCol).as("__t")))
-      .select(col("id"), Vectors.shinglesFast(shingleN)(col("__t")).as("shs"))
-      .where(size(col("shs")) > 0)
+    val shingled = shingleSets(docs, idCol, textCol, shingleN)
     val proj =
+      // one digest pass for both: the sketch struct is consumed twice, so
+      // the optimizer keeps it in its own projection (no kernel re-run)
       if (withSig) shingled.select(col("id"), col("shs"),
-        Vectors.md5Signature(numHashes)(col("shs")).as("sig"),
-        Vectors.md5BandKeys(numHashes, bands)(col("shs")).as("bks"))
+        Vectors.md5Sketch(numHashes, bands)(col("shs")).as("k"))
+        .select(col("id"), col("shs"), col("k.sig").as("sig"), col("k.bks").as("bks"))
       else shingled.select(col("id"), col("shs"),
         Vectors.md5BandKeys(numHashes, bands)(col("shs")).as("bks"))
     val ck = proj.localCheckpoint(false)
@@ -1865,13 +1868,11 @@ object Dedup {
       probe.queryExecution.optimizedPlan.stats.sizeInBytes <= limit
     if (!broadcastable)
       return ngramContaminationLarge(train, probe, idCol, textCol, n, minOverlap)
-    // compiled distinct-shingle kernel (the HOF form is interpreted and was
-    // this query's hot-spot at sf0.1)
     val tSh = train.select(col(idCol).as("train_id"),
-      Vectors.shinglesFast(n)(col(textCol)).as("sh_t"))
+      array_distinct(Text.shingles(col(textCol), n)).as("sh_t"))
       .where(size(col("sh_t")) > 0)
     val pSh = probe.select(col(idCol).as("probe_id"),
-      Vectors.shinglesFast(n)(col(textCol)).as("sh_p"))
+      array_distinct(Text.shingles(col(textCol), n)).as("sh_p"))
       .where(size(col("sh_p")) > 0)
     tSh.crossJoin(broadcast(pSh))
       .withColumn("overlap",
@@ -1919,9 +1920,9 @@ object Dedup {
       minOverlap: Double): DataFrame = {
     require(minOverlap > 0, s"minOverlap $minOverlap must be > 0")
     val tSh = train.select(col(idCol).as("train_id"),
-      explode(Vectors.shinglesFast(n)(col(textCol))).as("sh"))
+      explode(array_distinct(Text.shingles(col(textCol), n))).as("sh"))
     val pArr = probe.select(col(idCol).as("probe_id"),
-      Vectors.shinglesFast(n)(col(textCol)).as("sh_p"))
+      array_distinct(Text.shingles(col(textCol), n)).as("sh_p"))
       .where(size(col("sh_p")) > 0)
     val pSizes = pArr.select(col("probe_id"), size(col("sh_p")).as("__np"))
     val pSh = pArr.select(col("probe_id"), explode(col("sh_p")).as("sh"))
@@ -2030,13 +2031,8 @@ object Dedup {
     // the corpus text size: the standard reuse-vs-recompute trade this
     // codebase makes (memory+disk checkpoint blocks, cleaner-released).
     val spans = Par.widen(docs
-      .select(col(idCol).as("doc_id"), Text.tokens(col(textCol)).as("w"))
-      .where(size(col("w")) >= n)
-      .select(col("doc_id"),
-        explode(sequence(lit(1), size(col("w")) - (n - 1))).as("pos"),
-        col("w"))
-      .select(col("doc_id"),
-        md5(concat_ws(" ", slice(col("w"), col("pos"), lit(n)))).as("h")))
+      .select(col(idCol).as("doc_id"), explode(Text.shingles(col(textCol), n)).as("__g"))
+      .select(col("doc_id"), md5(col("__g")).as("h")))
       .localCheckpoint(true)
     // pass 1: sketch total span occurrences (narrow; sketch to the driver)
     val cms = spans.stat.countMinSketch("h", eps, confidence, seed = 42)
@@ -2081,7 +2077,7 @@ object Dedup {
       fpp: Double = 0.01): DataFrame = {
     require(minOverlap > 0, s"minOverlap $minOverlap must be > 0")
     val pArr = probe.select(col(idCol).as("probe_id"),
-      Vectors.shinglesFast(n)(col(textCol)).as("sh_p"))
+      array_distinct(Text.shingles(col(textCol), n)).as("sh_p"))
       .where(size(col("sh_p")) > 0)
       .localCheckpoint(true) // shingled ONCE: sizes, bloom and join reuse it
     val pSizes = pArr.select(col("probe_id"), size(col("sh_p")).as("__np"))
@@ -2092,7 +2088,7 @@ object Dedup {
     val bc = train.sparkSession.sparkContext.broadcast(bloom)
     val mightContain = udf { (s: String) => s != null && bc.value.mightContainString(s) }
     val tSh = train.select(col(idCol).as("train_id"),
-      explode(Vectors.shinglesFast(n)(col(textCol))).as("sh"))
+      explode(array_distinct(Text.shingles(col(textCol), n))).as("sh"))
       .where(mightContain(col("sh")))
     // same shuffled-hash discipline as [[ngramContaminationLarge]]: the
     // join feeds a hash agg, an SMJ sort of the exploded sides is waste

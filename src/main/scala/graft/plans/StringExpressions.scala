@@ -3,7 +3,9 @@ package graft.plans
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static Jaro-Winkler kernel shared by interpreted eval and generated
@@ -92,6 +94,74 @@ case class JaroWinkler(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+/** Static word-shingle kernel shared by interpreted eval and generated
+  * code: the n-grams of `split(trim(text), ' ')` joined by single spaces,
+  * computed on the UTF-8 bytes. SQL `trim` strips 0x20 only (tabs and
+  * newlines stay inside the edge tokens), the split is on the 0x20 byte
+  * with empty tokens kept, and fewer than `n` tokens give an empty array.
+  * Tokens are separated by exactly one 0x20 byte, so each shingle is the
+  * byte range of the trimmed text from its first token's start to its
+  * last token's end — no decode, no regex, no per-token join. */
+object WordShinglesImpl {
+  def shingles(text: UTF8String, n: Int): ArrayData = {
+    // a private copy: the shingles are views into it, and getBytes may
+    // hand back the input's own (possibly reused) buffer
+    val t = text.trim()
+    val bytes = new Array[Byte](t.numBytes)
+    t.writeToMemory(bytes, Platform.BYTE_ARRAY_OFFSET)
+    var spaces = 0
+    var i = 0
+    while (i < bytes.length) { if (bytes(i) == ' ') spaces += 1; i += 1 }
+    val tokens = spaces + 1
+    if (tokens < n) return new GenericArrayData(Array.empty[Any])
+    // starts(k) = first byte of token k; starts(tokens) = one past the end
+    // plus the separator, so token k ends at starts(k + 1) - 1
+    val starts = new Array[Int](tokens + 1)
+    var k = 1
+    i = 0
+    while (i < bytes.length) {
+      if (bytes(i) == ' ') { starts(k) = i + 1; k += 1 }
+      i += 1
+    }
+    starts(tokens) = bytes.length + 1
+    val out = new Array[Any](tokens - n + 1)
+    k = 0
+    while (k < out.length) {
+      val from = starts(k)
+      out(k) = UTF8String.fromBytes(bytes, from, starts(k + n) - 1 - from)
+      k += 1
+    }
+    new GenericArrayData(out)
+  }
+}
+
+/** Word n-gram shingles of a string (the corpus text kernels' shingle
+  * form) as a native Catalyst expression: null-safe, codegen'd as a single
+  * static call, so the shingle scan stays inside whole-stage codegen. It
+  * replaces the `transform(sequence(..), i => concat_ws(" ", slice(ws, i,
+  * n)))` HOF, whose interpreted lambda re-ran the regex split of the whole
+  * text once per output element (O(tokens²) per doc); the output is
+  * identical element for element. */
+case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
+  require(n >= 1, s"shingle width $n must be >= 1")
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"word_shingles expects a string argument, got ${child.dataType}")
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "word_shingles"
+
+  override protected def nullSafeEval(a: Any): Any =
+    WordShinglesImpl.shingles(a.asInstanceOf[UTF8String], n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"graft.plans.WordShinglesImpl.shingles($a, $n)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }
 
 /** `string_prefix64(s)` — the string's first 8 UTF-8 bytes as a SIGNED

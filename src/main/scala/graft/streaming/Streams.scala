@@ -909,7 +909,7 @@ object Streams {
     // projections (streaming frames cannot checkpoint); `pos|key` strings
     // key the state groups
     val bks = graft.functions.Vectors.md5BandKeys(16, 4)(
-      graft.functions.Vectors.shinglesFast(3)(col("text")))
+      array_distinct(graft.functions.Text.shingles(col("text"), 3)))
     val cells = widened
       .select(col("doc_id").as("id"), bks.as("bks"))
       .select(col("id"), posexplode(

@@ -491,4 +491,109 @@ class PropertySpec extends SparkSpecBase {
     val (topAll, restAll) = Dedup.topKCensus(m, 64)
     assert(topAll.length === 30 && restAll === 0L)
   }
+
+  // ---- text kernels: the compiled forms against their previous definitions
+
+  /** The interpreted HOF `Text.shingles` was before it became the native
+    * `WordShingles` expression — kept here as the reference. */
+  private def hofShingles(text: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column = {
+    val ws = split(trim(text), " ")
+    when(size(ws) < n, array().cast("array<string>")).otherwise(
+      transform(sequence(lit(1), size(ws) - (n - 1)),
+        i => concat_ws(" ", slice(ws, i, lit(n)))))
+  }
+
+  private val shingleTokenGen: Gen[String] = Gen.frequency(
+    6 -> Gen.choose(1, 6).flatMap(k => Gen.listOfN(k, Gen.alphaLowerChar).map(_.mkString)),
+    2 -> Gen.oneOf("é", "naïve", "中文", "日本語", "😀x", "Ω"),
+    1 -> Gen.oneOf("", "\t", "a\tb", "x\ny"))
+
+  /** Token strings with runs of spaces, leading/trailing spaces, tabs and
+    * newlines, multi-byte UTF-8 and empty tokens. */
+  private val shingleTextGen: Gen[String] = for {
+    k <- Gen.choose(0, 12)
+    toks <- Gen.listOfN(k, shingleTokenGen)
+    seps <- Gen.listOfN(k, Gen.frequency(6 -> " ", 2 -> "  ", 1 -> "   "))
+    lead <- Gen.oneOf("", "", " ", "  ", "\t", " \t", "\n")
+    trail <- Gen.oneOf("", "", " ", "   ", "\t", "\t ", "\n")
+  } yield lead + toks.zip(seps).map { case (t, sp) => t + sp }.mkString.stripSuffix(" ") + trail
+
+  test("WordShingles equals the HOF shingle form on random token strings (null, empty, n > tokens)") {
+    import spark.implicits._
+    val fixed = Seq("", " ", "   ", "\t", "a", "a b", "a  b", " a b c ", "\ta b c", "a b c\n",
+      "\t a b \t", "中文 😀x naïve é")
+    val texts: Seq[Option[String]] = None +: (fixed ++
+      (1 to cases).flatMap(i => sample(Gen.listOfN(40, shingleTextGen), 9100 + i))).map(Some(_))
+    val local = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "t")
+    // parquet: the generated (whole-stage codegen) path; the local relation
+    // is evaluated on the driver through the interpreted path
+    val dir = java.nio.file.Files.createTempDirectory("graft_shingle_prop").toString
+    local.write.mode("overwrite").parquet(dir)
+    val fromFile = spark.read.parquet(dir)
+    for (n <- Seq(1, 2, 3, 5, 13); df <- Seq(local, fromFile)) {
+      val rows = df.select(col("id"), graft.functions.Text.shingles(col("t"), n).as("got"),
+        hofShingles(col("t"), n).as("want")).orderBy("id").collect()
+      assert(rows.length === texts.length)
+      rows.foreach { r =>
+        val got = Option(r.getSeq[String](1))
+        val want = Option(r.getSeq[String](2))
+        assert(got === want, s"n=$n text=${texts(r.getLong(0).toInt).map(_.replace("\t", "\\t"))}")
+      }
+    }
+  }
+
+  /** The md5 MinHash kernel before digest-order minima: every digest
+    * hex-encoded and compared as a String. */
+  private def hexMd5Minima(sh: Seq[String], numHashes: Int): Array[String] = {
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def hex(bs: Array[Byte]): String = bs.map(b => f"${b & 0xff}%02x").mkString
+    val mins = new Array[String](numHashes)
+    sh.foreach { g =>
+      for (s <- 0 until numHashes) {
+        md.update(s.toString.getBytes(utf8))
+        md.update(':'.toByte)
+        md.update(g.getBytes(utf8))
+        val h = hex(md.digest())
+        if (mins(s) == null || h.compareTo(mins(s)) < 0) mins(s) = h
+      }
+    }
+    mins
+  }
+
+  private def hexMd5Bands(mins: Array[String], bands: Int): Seq[String] = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    mins.grouped(mins.length / bands).map { g =>
+      md.digest(g.mkString("|").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        .map(b => f"${b & 0xff}%02x").mkString
+    }.toSeq
+  }
+
+  test("md5BandKeys / md5Sketch equal the hex-compare kernel on random shingle sets (empty, null)") {
+    import spark.implicits._
+    import graft.functions.Vectors
+    val setGen = Gen.choose(0, 30).flatMap(k =>
+      Gen.listOfN(k, shingleTextGen.map(_.trim)).map(_.distinct))
+    val sets: Seq[Option[Seq[String]]] = None +: Some(Seq.empty[String]) +:
+      (1 to cases).flatMap(i => sample(Gen.listOfN(20, setGen), 9300 + i)).map(Some(_))
+    val df = sets.zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("id", "shs")
+    for ((numHashes, bands) <- Seq((16, 4), (32, 8), (6, 3))) {
+      val rows = df.select(col("id"),
+        Vectors.md5BandKeys(numHashes, bands)(col("shs")).as("bks"),
+        Vectors.md5Sketch(numHashes, bands)(col("shs")).as("k")).orderBy("id").collect()
+      rows.foreach { r =>
+        val sh = sets(r.getLong(0).toInt).getOrElse(Seq.empty)
+        val (wantSig, wantBks) =
+          if (sh.isEmpty) (Seq.empty[String], Seq.empty[String])
+          else {
+            val mins = hexMd5Minima(sh, numHashes)
+            (mins.toSeq, hexMd5Bands(mins, bands))
+          }
+        val k = r.getStruct(2)
+        assert(r.getSeq[String](1) === wantBks, s"bks ($numHashes,$bands) set=$sh")
+        assert(k.getAs[Seq[String]]("bks") === wantBks, s"sketch bks ($numHashes,$bands) set=$sh")
+        assert(k.getAs[Seq[String]]("sig") === wantSig, s"sketch sig ($numHashes,$bands) set=$sh")
+      }
+    }
+  }
 }

@@ -281,7 +281,7 @@ class StreamsSpec extends SparkSpecBase {
       val cells = rows.toDF("doc_id", "text")
         .select(col("doc_id").as("id"),
           graft.functions.Vectors.md5BandKeys(16, 4)(
-            graft.functions.Vectors.shinglesFast(3)(col("text"))).as("bks"))
+            array_distinct(graft.functions.Text.shingles(col("text"), 3))).as("bks"))
         .select(col("id"), posexplode(
           when(size(col("bks")) > 0, col("bks"))
             .otherwise(array(concat(lit("solo:"), col("id").cast("string"))))))
